@@ -129,39 +129,16 @@ object Bench {
     val jsonLine =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"probes":$ps,"reps":$reps,"failed":$failed,$jvm,"sf":"$sfDir"}"""
     println(jsonLine)
-    // The driver keeps only the last ~2000 chars of stdout, so the full
-    // line above (≈10 KB at 242 queries) arrives beheaded and fails to
-    // parse (BENCH_r09/r11 both record "parsed": null). Emit a COMPACT
-    // headline line twice at the very end — once behind a stable marker,
-    // once as bare JSON — so whichever convention the driver scans for,
-    // a complete parseable object sits inside the tail. The per-query
-    // map lives in bench_results.json (written below, committed).
-    // Locale.ROOT: the default-locale f"%.3f" renders decimal COMMAS on
-    // e.g. de_DE JVMs, which would make this line invalid JSON —
-    // defeating its entire purpose
-    val top = results.filter(_._2 >= 0).sortBy(-_._2).take(25)
-      .map { case (k, v) => "\"" + k + "\":" +
-        String.format(java.util.Locale.ROOT, "%.3f", Double.box(v)) }
-      .mkString("{", ",", "}")
-    // "top_queries", NOT "queries": the full jsonLine above already uses
-    // "queries" for the COMPLETE per-query map, and a parser that happens
-    // to grab this line instead must not silently receive different
-    // semantics under the same field name (ADVICE r12)
-    val compact =
-      s"""{"metric":"total","value":$total,"unit":"sec","top_queries":$top,"n_queries":${results.size},"reps":$reps,"failed":$failed,$jvm,"sf":"$sfDir","note":"top_queries holds top-25 by time; full per-query map in bench_results.json"}"""
-    println(s"BENCH_JSON: $compact")
-    // Measurement-contract fix (r20): the driver records only the last
-    // 2000 chars of stdout and parses the last complete JSON line in
-    // that tail — PERF_r19 shows the consequence of a tail without a
-    // "queries" key (n_common=0, bench_ok=false, empty scaling map; no
-    // round's tail has ever parsed with one, BENCH_r09..r19 checked).
-    // The full 325-entry map is ~9 KB and can never fit, so emit a
-    // FINAL line carrying the contract keys with as many per-query
-    // entries as fit the tail budget, largest-time first (those drive
-    // any per-query perf/scaling comparison; the omitted tail queries
-    // are each well under a second). The complete map still lives in
-    // the full line above and in bench_results.json. Nothing may be
-    // printed after this line.
+    // The driver records only the last 2000 chars of stdout and parses
+    // the last complete JSON line in that tail, so the full line above
+    // (≈10 KB at 325 queries) arrives beheaded. Emit a FINAL line
+    // carrying the contract keys with as many per-query entries as fit
+    // the tail budget, largest-time first (those drive any per-query
+    // perf/scaling comparison; the omitted tail queries are each well
+    // under a second). The complete map still lives in the full line
+    // above and in bench_results.json. Locale.ROOT: the default-locale
+    // "%.3f" renders decimal COMMAS on e.g. de_DE JVMs, which would make
+    // this line invalid JSON. Nothing may be printed after this line.
     val sorted = results.filter(_._2 >= 0).sortBy(-_._2)
     val fixedPart =
       s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"reps":$reps,"failed":$failed,$jvm,"note":"queries holds the top-N by time that fit the driver's 2000-char stdout tail; full map in bench_results.json","queries":{}}"""

@@ -687,8 +687,9 @@ object GraftExtensions {
           version = Some(v))
         plan(s.read.parquet(graft.ops.Catalog.ref(s, cat, v, "manifest")))
       }),
-      // vector RETRIEVAL from SQL: a persisted IVF index (IvfIndex.save
-      // layout) probed by a query table — SELECT * FROM
+      // vector RETRIEVAL from SQL: the current version of a published
+      // IVF index (IvfIndex.publish root) probed by a query table —
+      // SELECT * FROM
       // graft_knn_probe('/indexes/corpus', '/queries/today',
       //                 'qid', 'qv', 5, 2)
       "graft_knn_probe" -> ((args: Seq[Expression]) => {
@@ -696,7 +697,7 @@ object GraftExtensions {
           "indexPath, queriesDir, idCol, vecCol, k, nprobe", args, 6)
         implicit val s: SparkSession = active
         plan(graft.ops.Similarity.IvfIndex
-          .load(strLit(args(0), "graft_knn_probe"))
+          .loadCurrent(strLit(args(0), "graft_knn_probe"))
           .knnProbe(
             s.read.parquet(strLit(args(1), "graft_knn_probe")),
             strLit(args(2), "graft_knn_probe"),

@@ -1192,7 +1192,8 @@ object SparkEntry {
     }),
 
     // ---- PERSISTED LSH index admission: d43's scenario with the index
-    // round-tripped through disk (K1 parquet tables + params), proving
+    // round-tripped through disk (a published version: parquet tables +
+    // params), proving
     // the production cross-job shape — yesterday's corpus is its saved
     // index, today's session loads it cold and filters a batch without
     // the corpus ever being re-read. Same oracle as d43: the reloaded
@@ -1209,17 +1210,17 @@ object SparkEntry {
         .select((col("doc_id") + 4000000).as("doc_id"),
           reverse(col("text")).as("text"))
       val path = s"${gateScratch("d47")}/index"
-      ops.Dedup.NearDupIndex.save(
+      ops.Dedup.NearDupIndex.publish(
         ops.Dedup.nearDupIndex(docs, "doc_id", "text",
           k = 12, bands = 6, shingleSize = 3), path)
-      val loaded = ops.Dedup.NearDupIndex.load(path)
+      val loaded = ops.Dedup.NearDupIndex.loadCurrent(path)
       ops.Dedup.nearDupFilter(loaded, near.unionAll(copies).unionAll(freshDocs),
           "doc_id", "text", tau = 0.5)
         .orderBy("doc_id")
     }),
 
     // ---- index EXTENSION across admission rounds: day-1 survivors fold
-    // into the index (extend → save → load), and day 2 probes content
+    // into the index (extend → publish → loadCurrent), and day 2 probes content
     // only the GROWN index can reject — near-dups and exact copies of
     // day-1 admissions bounce, fresh rows land. The oracle replays
     // admission against a rebuilt corpus ∪ day-1 index: extend must be
@@ -1236,9 +1237,9 @@ object SparkEntry {
       val admitted1 = ops.Dedup.nearDupFilter(idx, batch1,
         "doc_id", "text", tau = 0.5)
       val path = s"${gateScratch("d48")}/index"
-      ops.Dedup.NearDupIndex.save(
+      ops.Dedup.NearDupIndex.publish(
         ops.Dedup.NearDupIndex.extend(idx, admitted1, "doc_id", "text"), path)
-      val idx2 = ops.Dedup.NearDupIndex.load(path)
+      val idx2 = ops.Dedup.NearDupIndex.loadCurrent(path)
       val near2 = batch1.select((col("doc_id") + 1000000).as("doc_id"),
         concat(col("text"), lit(" zzz extra suffix")).as("text"))
       val copies2 = batch1.select((col("doc_id") + 2000000).as("doc_id"),
@@ -1252,10 +1253,10 @@ object SparkEntry {
     }),
 
     // ---- the FULL cross-session text-index lifecycle (the LSH sibling
-    // of e30): build → save → load → day-1 admission → extend →
-    // TAKEDOWN (remove every exact-dup group whose representative id
-    // % 9 == 4 — the right-to-be-forgotten leg) → re-publish to the
-    // SAME path → cold reload → day-2 admission. Day 2 observes the
+    // of e30): build → publish → loadCurrent → day-1 admission → extend
+    // → TAKEDOWN (remove every exact-dup group whose representative id
+    // % 9 == 4 — the right-to-be-forgotten leg) → publish v2 under the
+    // SAME root → cold loadCurrent → day-2 admission. Day 2 observes the
     // removal: exact copies of removed content RE-ADMIT (fingerprints
     // and band rows gone), while copies of day-1 admissions and
     // near-dups of surviving content still bounce. Oracle = one
@@ -1268,10 +1269,10 @@ object SparkEntry {
         .select((col("doc_id") + 4000000).as("doc_id"),
           reverse(col("text")).as("text"))
       val path = s"${gateScratch("d63")}/index"
-      ops.Dedup.NearDupIndex.save(
+      ops.Dedup.NearDupIndex.publish(
         ops.Dedup.nearDupIndex(docs, "doc_id", "text",
           k = 12, bands = 6, shingleSize = 3), path)
-      val day1 = ops.Dedup.NearDupIndex.load(path)
+      val day1 = ops.Dedup.NearDupIndex.loadCurrent(path)
       val admitted1 = ops.Dedup.nearDupFilter(day1, batch1,
         "doc_id", "text", tau = 0.5)
       // takedown set: whole exact-dup groups (closure precondition) —
@@ -1285,8 +1286,8 @@ object SparkEntry {
       val shrunk = ops.Dedup.NearDupIndex.remove(
         ops.Dedup.NearDupIndex.extend(day1, admitted1, "doc_id", "text"),
         removedDocs, "doc_id", "text")
-      ops.Dedup.NearDupIndex.save(shrunk, path) // re-publish, same path
-      val day2 = ops.Dedup.NearDupIndex.load(path)
+      ops.Dedup.NearDupIndex.publish(shrunk, path) // v2, same root
+      val day2 = ops.Dedup.NearDupIndex.loadCurrent(path)
       val readmit = removedDocs
         .select((col("doc_id") + 8000000).as("doc_id"), col("text"))
       val copies2 = batch1
@@ -5758,16 +5759,16 @@ object SparkEntry {
       implicit val sp: SparkSession = s
       val emb = t(s, dir, "embeddings")
       val path = s"${gateScratch("e28")}/ivf"
-      ops.Similarity.IvfIndex.save(
+      ops.Similarity.IvfIndex.publish(
         ops.Similarity.ivfIndexSeeded(emb, "vec_id", "embedding", nlist = 8),
         path)
-      ops.Similarity.IvfIndex.load(path)
+      ops.Similarity.IvfIndex.loadCurrent(path)
         .knnJoin(k = 5, nprobe = 2)
         .orderBy("id", "rank")
     }),
 
     // ---- PERSISTED PQ codebook: e8's encode with the codebook fit,
-    // saved (seeds + (m,k) params tables), cold-loaded, and replayed
+    // published (seeds + (m,k) params tables), cold-loaded, and replayed
     // against the batch — the contract that matters in production: the
     // codebook defines the meaning of every stored code, so it is
     // trained once and SHIPPED, never re-derived per batch -------------
@@ -5775,47 +5776,47 @@ object SparkEntry {
       implicit val sp: SparkSession = s
       val emb = t(s, dir, "embeddings")
       val path = s"${gateScratch("e29")}/pq"
-      ops.Similarity.PqCodebook.save(
+      ops.Similarity.PqCodebook.publish(
         ops.Similarity.PqCodebook.fit(emb, "vec_id", "embedding", m = 8, k = 8),
         path)
-      ops.Similarity.PqCodebook.load(path)
+      ops.Similarity.PqCodebook.loadCurrent(path)
         .encode(emb, "vec_id", "embedding")
         .orderBy("id", "sub")
     }),
 
-    // ---- CROSS-SESSION index maintenance cycle: build → save → load →
-    // addVectors (day-2 batch, frozen centroids) → remove (takedown
-    // wave over old AND new ids) → RE-PUBLISH to the same path → load →
-    // search. e28 proves cold-load search; this gate proves the whole
-    // production loop, including that the second save replaces what
-    // load reads (the r15 overwrite-vs-uniquePath fix). Oracle = the
+    // ---- CROSS-SESSION index maintenance cycle: build → publish →
+    // loadCurrent → addVectors (day-2 batch, frozen centroids) → remove
+    // (takedown wave over old AND new ids) → publish v2 under the same
+    // root → loadCurrent → search. e28 proves cold-load search; this
+    // gate proves the whole production loop, including that the second
+    // publish is what loadCurrent reads. Oracle = the
     // e7 replay over exactly (build ∪ added) − removed with the BUILD's
     // centroid panel ---------------------------------------------------
     "e30_ivf_maintenance_cycle" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       val emb = t(s, dir, "embeddings")
       val path = s"${gateScratch("e30")}/ivf"
-      ops.Similarity.IvfIndex.save(
+      ops.Similarity.IvfIndex.publish(
         ops.Similarity.ivfIndexSeeded(emb, "vec_id", "embedding", nlist = 8),
         path)
-      val day2 = ops.Similarity.IvfIndex.load(path)
+      val day2 = ops.Similarity.IvfIndex.loadCurrent(path)
         .addVectors(emb.filter(col("vec_id") % 10 === 5)
           .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")),
           "vec_id", "embedding")
       val pruned = day2.remove(
         day2.assigned.select(col("id").as("vec_id"))
           .filter(col("vec_id") % 7 === 0), "vec_id")
-      ops.Similarity.IvfIndex.save(pruned, path) // re-publish in place
-      ops.Similarity.IvfIndex.load(path)
+      ops.Similarity.IvfIndex.publish(pruned, path) // v2, same root
+      ops.Similarity.IvfIndex.loadCurrent(path)
         .knnJoin(k = 5, nprobe = 2)
         .orderBy("id", "rank")
     }),
 
     // ---- CROSS-SESSION lifecycle of the vector-LSH ADMISSION index
-    // (the front-door table s29/s31 probe frozen): build → save →
-    // cold load → day-1 admission → extend with the survivors →
+    // (the front-door table s29/s31 probe frozen): build → publish →
+    // cold loadCurrent → day-1 admission → extend with the survivors →
     // TAKEDOWN of exact-vector group representatives (id % 9 == 4) →
-    // re-publish to the SAME path → reload → day-2 admission. Day 2
+    // publish v2 under the SAME root → loadCurrent → day-2 admission. Day 2
     // observes the takedown: copies of removed vectors RE-ADMIT, while
     // copies of day-1 admissions and perturbed survivors still bounce.
     // Oracle = two nested admission replays — extend/remove must be
@@ -5825,11 +5826,11 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val corpus = emb.select(col("vec_id"), col("embedding"))
       val path = s"${gateScratch("e31")}/vlsh"
-      ops.Dedup.VectorNearDupIndex.save(
+      ops.Dedup.VectorNearDupIndex.publish(
         ops.Dedup.vectorNearDupIndex(corpus, "vec_id", "embedding",
           dim = 64, bits = 6),
         dim = 64, bits = 6, path)
-      val day1 = ops.Dedup.VectorNearDupIndex.load(path)
+      val day1 = ops.Dedup.VectorNearDupIndex.loadCurrent(path)
       val batch1 = emb.filter(col("vec_id") % 10 === 5)
         .select((col("vec_id") + 4000000).as("vec_id"),
           reverse(col("embedding").cast("array<double>")).as("embedding"))
@@ -5841,10 +5842,10 @@ object SparkEntry {
       // (whole groups — the closure precondition)
       val removed = ops.Dedup.collapseVectors(corpus, "vec_id", "embedding")
         .filter(col("id") % 9 === 4).select("id")
-      ops.Dedup.VectorNearDupIndex.save(
+      ops.Dedup.VectorNearDupIndex.publish(
         ops.Dedup.VectorNearDupIndex.remove(extended, removed, "id"),
-        day1.dim, day1.bits, path) // re-publish in place
-      val day2 = ops.Dedup.VectorNearDupIndex.load(path)
+        day1.dim, day1.bits, path) // v2, same root
+      val day2 = ops.Dedup.VectorNearDupIndex.loadCurrent(path)
       val readmit = ops.Dedup.collapseVectors(corpus, "vec_id", "embedding")
         .filter(col("id") % 9 === 4)
         .select((col("id") + 8000000).as("vec_id"), col("v").as("embedding"))
@@ -5865,12 +5866,11 @@ object SparkEntry {
     }),
 
     // ---- VERSIONED index publish — the lake posture for the vector
-    // store: immutable v<N> dirs + atomic claim/commit markers
-    // (closing save()'s documented at-scale caveat: in-place overwrite
-    // is a single mutable slot). v1 = the build; maintenance (add +
-    // takedown) publishes v2; the gate reads BOTH — a pinned v1 reader
-    // keeps a consistent snapshot (index time travel) while the newest
-    // committed version serves the maintained index -------------------
+    // store: immutable v<N> dirs + atomic claim/commit markers, the only
+    // persistence verb of every index family. v1 = the build;
+    // maintenance (add + takedown) publishes v2; the gate reads BOTH —
+    // a pinned v1 reader keeps a consistent snapshot (index time travel)
+    // while the newest committed version serves the maintained index --
     "e33_ivf_versioned" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       val emb = t(s, dir, "embeddings")
@@ -5906,7 +5906,7 @@ object SparkEntry {
       val tmp = gateScratch("e32")
       GraftExtensions.register(s)
       val emb = t(s, dir, "embeddings")
-      ops.Similarity.IvfIndex.save(
+      ops.Similarity.IvfIndex.publish(
         ops.Similarity.ivfIndexSeeded(emb, "vec_id", "embedding", nlist = 8),
         s"$tmp/index")
       emb.filter(col("vec_id") % 5 === 2)
@@ -7813,10 +7813,10 @@ object SparkEntry {
       val tmp = gateScratch("s38")
       val emb = t(s, dir, "embeddings")
       val path = s"$tmp/index"
-      ops.Similarity.IvfIndex.save(
+      ops.Similarity.IvfIndex.publish(
         ops.Similarity.ivfIndexSeeded(emb, "vec_id", "embedding", nlist = 8),
         path)
-      val loaded = ops.Similarity.IvfIndex.load(path)
+      val loaded = ops.Similarity.IvfIndex.loadCurrent(path)
       val queries = emb.filter(col("vec_id") % 5 === 2)
         .select((col("vec_id") + 1000000).as("qid"),
           reverse(col("embedding").cast("array<double>")).as("qv"))

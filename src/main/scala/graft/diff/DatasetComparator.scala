@@ -39,7 +39,6 @@ case class DiffOptions(
     actualPrefix: String = "actual",
     allowDuplicates: Boolean = false,
     providedSchema: Option[StructType] = None,
-    cache: Boolean = true,
     /** Single-pass keyed compare: ONE full-outer join on the raw key
       * columns with inline errCol, instead of the reference-shaped
       * except/except/join/flat-join/join pipeline. Produces the same
@@ -143,7 +142,8 @@ class DatasetComparator(
       .map(n => q(s"${expectedPrefix}_$n") <=> q(s"${actualPrefix}_$n"))
       .foldLeft(col(refMark) && col(actMark))(_ && _)
     // one-sided rows leave the marks null → conjunction null → keep
-    val coarseP = maybePersist(joined.filter(!coalesce(allEqual, lit(false))))
+    val coarseP = joined.filter(!coalesce(allEqual, lit(false)))
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
     // flatten select list over the ORIGINAL shape; array lengths probed
     // on the (persisted, small) diff candidates — same complement-side
@@ -192,8 +192,8 @@ class DatasetComparator(
   private def compareParity(
       refSel: DataFrame, actSel: DataFrame, selector: List[Column]): ComparisonResult = {
     val keyName = uniqueColumnName("graft_row_key", refSel.schema)
-    val refKeyed = maybePersist(addKeyColumn(refSel, keyName))
-    val actKeyed = maybePersist(addKeyColumn(actSel, keyName))
+    val refKeyed = addKeyColumn(refSel, keyName).persist(StorageLevel.MEMORY_AND_DISK)
+    val actKeyed = addKeyColumn(actSel, keyName).persist(StorageLevel.MEMORY_AND_DISK)
 
     // one aggregate action per side → (rowCount, duplicateKeyCount)
     val (refCount, refDups) = countsAndDuplicates(refKeyed, keyName)
@@ -204,8 +204,8 @@ class DatasetComparator(
       throw new DuplicateKeysException(refDups, actDups)
     }
 
-    val refComplement = maybePersist(refKeyed.except(actKeyed))
-    val actComplement = maybePersist(actKeyed.except(refKeyed))
+    val refComplement = refKeyed.except(actKeyed).persist(StorageLevel.MEMORY_AND_DISK)
+    val actComplement = actKeyed.except(refKeyed).persist(StorageLevel.MEMORY_AND_DISK)
     val refDiffCount = refComplement.count()
     val actDiffCount = actComplement.count()
     // complements are materialized; the keyed inputs can go
@@ -225,9 +225,6 @@ class DatasetComparator(
         selector, Some(diffDF), diffCount)
     }
   }
-
-  private def maybePersist(df: DataFrame): DataFrame =
-    if (cache) df.persist(StorageLevel.MEMORY_AND_DISK) else df
 
   /** Schema check + canonical column alignment (reference
     * `DatasetComparator.scala:69-78,148-173`). With a provided schema both

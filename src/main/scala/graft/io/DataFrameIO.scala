@@ -64,11 +64,10 @@ object DataFrameIO {
 
   /** Write, resolving a collision-free path first (K2: existing target →
     * `_<millis>` suffix). An explicit `saveMode = overwrite` OPTS OUT of
-    * K2 and writes the requested path in place — index re-publication
-    * (NearDupIndex / IvfIndex / PqCodebook `save`) relies on the second
-    * save replacing the directory a later `load` reads; suffixing it
-    * would leave `load` silently returning the stale index. Returns the
-    * path actually written (empty for jdbc sinks). */
+    * K2 and writes the requested path in place — a sink option for jobs
+    * that rerun into a fixed location, where a suffixed sibling would
+    * leave downstream readers on the stale output. Returns the path
+    * actually written (empty for jdbc sinks). */
   def write(df: DataFrame, p: SourceParams)(implicit spark: SparkSession): String = {
     val base = df.write.format(resolveFormat(p.format)).options(p.options)
     val parted = if (p.partitionBy.isEmpty) base

@@ -70,9 +70,13 @@ object Catalog {
     * refs, and retries — so no concurrent writer's artifacts are ever
     * silently dropped, and every version's world is derived from its
     * immediate predecessor (linearizable history). `prepare` must
-    * therefore be safe to run more than once (idempotent artifact
-    * preparation: immutable dirs keyed by content/uuid, the same rule
-    * every commit path already follows).
+    * therefore be a PURE FUNCTION OF `base` — being safe to re-run is
+    * not enough: while the committed base is unchanged (a held-claim
+    * retry), the loop reuses the refs the first attempt prepared
+    * instead of calling `prepare` again, so anything else `prepare`
+    * reads (wall clock, external tables, mutable state) is sampled once
+    * per base. Its artifacts must live in immutable dirs keyed by
+    * content/uuid, the same rule every commit path already follows.
     *
     * Bounded, with a SEPARATE budget per conflict kind — the two mean
     * opposite things about progress. A STALE EXPECTED (the committed

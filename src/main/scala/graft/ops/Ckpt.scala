@@ -34,13 +34,11 @@ import org.apache.spark.sql.Dataset
   * itself compiles the physical plan (kicking off broadcast futures for
   * everything BELOW it), even loop-digest patterns race: round N+1's
   * barrier call can start a broadcast build over round N's still-pending
-  * frame before round N+1's digest runs. So [[pinned]] materializes
-  * eagerly by default: the compute happens exactly once either way (the
-  * consumer then reads the cached blocks), eager only adds one driver-
-  * thread job launch per site, and the pending-checkpoint window never
-  * exists. `spark.graft.checkpoint.eager=false` restores the old lazy
-  * behavior for A/B perf measurements ONLY — never set it on a cluster
-  * where any barriered frame can feed a broadcast join.
+  * frame before round N+1's digest runs. So [[pinned]] always
+  * materializes eagerly: the compute happens exactly once either way
+  * (the consumer then reads the cached blocks), eager only adds one
+  * driver-thread job launch per site, and the pending-checkpoint window
+  * never exists.
   *
   * `localCheckpoint` (not `persist`) remains the right primitive: a
   * persisted Dataset is pinned by the CacheManager until an explicit
@@ -50,61 +48,10 @@ import org.apache.spark.sql.Dataset
   */
 object Ckpt {
 
-  /** Set to "false" to restore lazy checkpoints (perf A/B only — unsafe
-    * with broadcast joins; see the object scaladoc). The opt-out applies
-    * ONLY to [[pinned]]: sites where eagerness is load-bearing for
-    * CORRECTNESS — a frame derived from `load(path)` pinned immediately
-    * before an overwrite publish back to that same `path` (the
-    * index/rollup re-publication loops) — use [[forced]], which ignores
-    * this conf. A lazy checkpoint there leaves the read of the target
-    * directory pending while the overwrite deletes it, destroying the
-    * persisted state the publish was refreshing. */
-  val EagerConf = "spark.graft.checkpoint.eager"
-
-  /** Materialization barrier: truncate lineage and cache via
-    * `localCheckpoint`, eagerly unless [[EagerConf]] opts out. */
-  def pinned[T](ds: Dataset[T]): Dataset[T] = {
-    val eager =
-      ds.sparkSession.conf.get(EagerConf, "true").equalsIgnoreCase("true")
-    ds.localCheckpoint(eager = eager)
-  }
-
-  /** [[pinned]] with the [[EagerConf]] opt-out BYPASSED — for
-    * read-your-own-overwrite sites, where the barrier is a correctness
-    * requirement (the frame must be fully materialized before its source
-    * directory is deleted by the overwrite), not a liveness/perf
-    * default. */
-  def forced[T](ds: Dataset[T]): Dataset[T] =
+  /** Materialization barrier: truncate lineage and cache via an eager
+    * `localCheckpoint`. */
+  def pinned[T](ds: Dataset[T]): Dataset[T] =
     ds.localCheckpoint(eager = true)
-
-  /** [[forced]] ONLY when the frame's plan actually scans files under
-    * `path` — the exact condition the read-your-own-overwrite pin
-    * exists for. The index save verbs overwrite a destination the
-    * frame MAY have been derived from (in-place re-publication), but
-    * in the two most common flows it was not: a fresh build reads only
-    * the corpus, and a [[Versions]] publish writes into a brand-new
-    * immutable version dir while reading the previous one. Those paid
-    * a full eager materialization per table (≈8 extra jobs per
-    * NearDupIndex save) purely as insurance. The plan walk is exact
-    * for file relations: every `HadoopFsRelation`'s resolved root
-    * paths are checked against `path`, no filesystem calls. */
-  def pinnedIfReadsFrom[T](ds: Dataset[T], path: String): Dataset[T] = {
-    val target = new org.apache.hadoop.fs.Path(path).toUri.getPath
-    def under(p: org.apache.hadoop.fs.Path): Boolean = {
-      val s = p.toUri.getPath
-      s == target || s.startsWith(target + "/")
-    }
-    val reads = ds.queryExecution.analyzed.exists {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources
-                .HadoopFsRelation => fs.location.rootPaths.exists(under)
-          case _ => false
-        }
-      case _ => false
-    }
-    if (reads) forced(ds) else ds
-  }
 
   /** Free a SUPERSEDED barrier's cached blocks immediately, instead of
     * waiting for the ContextCleaner to notice unreachability. The

@@ -257,50 +257,24 @@ object Dedup {
 
   object NearDupIndex {
 
-    /** Persist an index through the generic sink (K1): three parquet
-      * tables plus a one-row params table pinning (k, bands,
+    /** Write one version image into the freshly claimed `dir`: three
+      * parquet tables plus a one-row params table pinning (k, bands,
       * shingleSize) — the signature half of the index, without which a
       * reload could silently band with different parameters and miss
-      * every duplicate. Overwrite mode makes re-publication idempotent
-      * (the index for day N is rebuilt-or-extended and re-published
-      * atomically per table). */
-    def save(idx: NearDupIndex, path: String)(implicit spark: SparkSession): Unit = {
-      // pinned before the overwrite: the admission loop saves an index
-      // derived from load(path) (extend) back to the SAME path, and an
-      // overwrite that still lazily reads its own target deletes the
-      // files mid-scan — the barrier severs that read. Ckpt.forced, not
-      // pinned: a correctness pin, exempt from the eager-conf opt-out
-      // pin only when the table's plan actually reads under the index
-      // root (in-place re-publication); fresh builds and versioned
-      // publishes skip the materialization entirely
-      def w(df: DataFrame, sub: String): Unit =
-        graft.io.DataFrameIO.write(Ckpt.pinnedIfReadsFrom(df, path),
-          graft.io.SourceParams(
-            "parquet", Some(s"$path/$sub"), saveMode = Some("overwrite")))
-      w(idx.fingerprints, "fingerprints")
-      w(idx.bands, "bands")
-      w(idx.hashes, "hashes")
+      * every duplicate. Spark's default ErrorIfExists mode: the claim
+      * made `dir` this writer's alone, so a collision fails loudly. */
+    private def writeVersion(idx: NearDupIndex, dir: String)(
+        implicit spark: SparkSession): Unit = {
       import spark.implicits._
-      w(Seq((idx.k, idx.nBands, idx.shingleSize))
-        .toDF("k", "bands", "shingle_size"), "params")
-    }
-
-    /** Reload a [[save]]d index — the cross-job half of incremental
-      * admission: yesterday's corpus is represented on disk by its
-      * index tables, today's batch probes them via [[nearDupFilter]]
-      * at O(batch) cost without the corpus ever being re-read. */
-    def load(path: String)(implicit spark: SparkSession): NearDupIndex = {
-      def r(sub: String): DataFrame = graft.io.DataFrameIO.load(
-        graft.io.SourceParams("parquet", Some(s"$path/$sub")))
-      val params = r("params").head()
-      NearDupIndex(r("fingerprints"), r("bands"), r("hashes"),
-        k = params.getAs[Int]("k"),
-        nBands = params.getAs[Int]("bands"),
-        shingleSize = params.getAs[Int]("shingle_size"))
+      idx.fingerprints.write.parquet(s"$dir/fingerprints")
+      idx.bands.write.parquet(s"$dir/bands")
+      idx.hashes.write.parquet(s"$dir/hashes")
+      Seq((idx.k, idx.nBands, idx.shingleSize))
+        .toDF("k", "bands", "shingle_size").write.parquet(s"$dir/params")
     }
 
     /** Grow an index with newly ADMITTED rows — the third leg of the
-      * cross-job admission loop (build → filter batch → EXTEND → save):
+      * cross-job admission loop (build → filter batch → EXTEND → publish):
       * the index absorbs each day's survivors at O(batch) cost, so the
       * corpus is never re-indexed. `admitted` must be the output of a
       * [[nearDupFilter]] pass (intra-batch collapsed, verified fresh) —
@@ -342,18 +316,30 @@ object Dedup {
         idx.hashes.unionAll(hashed), idx.k, idx.nBands, idx.shingleSize)
     }
 
-    /** Versioned publish for the text index — the [[graft.ops.Versions]]
-      * discipline over [[save]]: immutable v<N> images, atomic pointer
-      * flip, time travel, vacuum. A pinned admission worker keeps a
-      * consistent index snapshot while the daily extend/takedown cycle
-      * publishes around it. */
+    /** Publish `idx` as the next immutable version under `path` — the
+      * index's only persistence verb ([[graft.ops.Versions]] claim/commit
+      * discipline: time travel, vacuum, and an image derived from
+      * [[loadCurrent]] never touches the version it was read from). A
+      * pinned admission worker keeps a consistent index snapshot while
+      * the daily extend/takedown cycle publishes around it. */
     def publish(idx: NearDupIndex, path: String)(
         implicit spark: SparkSession): Int =
-      Versions.publish(path, dir => save(idx, dir))
+      Versions.publish(path, writeVersion(idx, _))
 
+    /** Load a committed version — the cross-job half of incremental
+      * admission: yesterday's corpus is represented on disk by its
+      * index tables, today's batch probes them via [[nearDupFilter]]
+      * at O(batch) cost without the corpus ever being re-read. */
     def loadVersion(path: String, version: Int)(
-        implicit spark: SparkSession): NearDupIndex =
-      load(Versions.versionDir(path, version))
+        implicit spark: SparkSession): NearDupIndex = {
+      val dir = Versions.versionDir(path, version)
+      def r(sub: String): DataFrame = spark.read.parquet(s"$dir/$sub")
+      val params = r("params").head()
+      NearDupIndex(r("fingerprints"), r("bands"), r("hashes"),
+        k = params.getAs[Int]("k"),
+        nBands = params.getAs[Int]("bands"),
+        shingleSize = params.getAs[Int]("shingle_size"))
+    }
 
     def loadCurrent(path: String)(implicit spark: SparkSession): NearDupIndex =
       loadVersion(path, Versions.current(path))
@@ -399,7 +385,7 @@ object Dedup {
 
   /** Build a [[NearDupIndex]] from a corpus. One collapse shuffle + one
     * banding pass; every output is a plain DataFrame the caller can
-    * persist (parquet) and reload for each batch. */
+    * [[NearDupIndex.publish]] and reload for each batch. */
   def nearDupIndex(
       corpus: DataFrame,
       idCol: String,
@@ -958,7 +944,7 @@ object Dedup {
       Seq("bucket"), maxBucket)
 
   /** Cross-session lifecycle for the [[vectorNearDupIndex]] admission
-    * table — the vector-LSH sibling of [[NearDupIndex]]'s save / load /
+    * table — the vector-LSH sibling of [[NearDupIndex]]'s publish / load /
     * extend / remove and of the IVF family's e28/e30 cycle: the
     * embedding front door (s29/s31) probes a FROZEN index, and this
     * object lets that index live on disk between sessions and absorb
@@ -967,39 +953,22 @@ object Dedup {
     * ([[graft.ops.Similarity.planes]]), so persisting those two ints
     * is enough to band any future batch identically — banding with
     * the WRONG geometry would silently miss every duplicate, hence
-    * the params table and the self-describing [[load]]. */
+    * the params table and the self-describing
+    * [[VectorNearDupIndex.loadVersion]]. */
   final case class VectorIndexHandle(buckets: DataFrame, dim: Int, bits: Int)
 
   object VectorNearDupIndex {
 
-    /** Persist the bucket table (partitioned by `bucket`, so a probe's
-      * touched buckets prune at the file level) plus a one-row
-      * (dim, bits) params table. Ckpt.forced before the overwrite: the
-      * maintenance loop re-publishes an index derived from load(path)
-      * back to the same path (read-your-own-overwrite). */
-    def save(index: DataFrame, dim: Int, bits: Int, path: String)(
-        implicit spark: SparkSession): Unit = {
+    /** Write one version image into the freshly claimed `dir`: the
+      * bucket table (partitioned by `bucket`, so a probe's touched
+      * buckets prune at the file level) plus a one-row (dim, bits)
+      * params table. Default ErrorIfExists mode, as for
+      * [[NearDupIndex]]. */
+    private def writeVersion(index: DataFrame, dim: Int, bits: Int,
+        dir: String)(implicit spark: SparkSession): Unit = {
       import spark.implicits._
-      graft.io.DataFrameIO.write(Ckpt.pinnedIfReadsFrom(index, path),
-        graft.io.SourceParams("parquet", Some(s"$path/buckets"),
-          saveMode = Some("overwrite"), partitionBy = Seq("bucket")))
-      graft.io.DataFrameIO.write(Seq((dim, bits)).toDF("dim", "bits"),
-        graft.io.SourceParams("parquet", Some(s"$path/params"),
-          saveMode = Some("overwrite")))
-    }
-
-    /** Reload a [[save]]d index. `bucket` comes back as the partition
-      * column (re-cast to long — directory-name inference would
-      * otherwise narrow it to int); `nrm` round-trips as a stored
-      * double, so every loaded cosine is bit-identical. */
-    def load(path: String)(implicit spark: SparkSession): VectorIndexHandle = {
-      def r(sub: String): DataFrame = graft.io.DataFrameIO.load(
-        graft.io.SourceParams("parquet", Some(s"$path/$sub")))
-      val p = r("params").head()
-      VectorIndexHandle(
-        r("buckets").withColumn("bucket", col("bucket").cast("long"))
-          .select("id", "v", "bucket", "nrm"),
-        dim = p.getAs[Int]("dim"), bits = p.getAs[Int]("bits"))
+      index.write.partitionBy("bucket").parquet(s"$dir/buckets")
+      Seq((dim, bits)).toDF("dim", "bits").write.parquet(s"$dir/params")
     }
 
     /** Grow the index with newly ADMITTED vectors (the output of a
@@ -1030,15 +999,26 @@ object Dedup {
       index.select("id", "v", "bucket", "nrm").unionAll(adm)
     }
 
-    /** Versioned publish — the [[graft.ops.Versions]] discipline over
-      * [[save]] (see [[NearDupIndex.publish]]). */
+    /** Publish the next immutable version under `path` — the index's
+      * only persistence verb (see [[NearDupIndex.publish]]). */
     def publish(index: DataFrame, dim: Int, bits: Int, path: String)(
         implicit spark: SparkSession): Int =
-      Versions.publish(path, dir => save(index, dim, bits, dir))
+      Versions.publish(path, writeVersion(index, dim, bits, _))
 
+    /** Load a committed version. `bucket` comes back as the partition
+      * column (re-cast to long — directory-name inference would
+      * otherwise narrow it to int); `nrm` round-trips as a stored
+      * double, so every loaded cosine is bit-identical. */
     def loadVersion(path: String, version: Int)(
-        implicit spark: SparkSession): VectorIndexHandle =
-      load(Versions.versionDir(path, version))
+        implicit spark: SparkSession): VectorIndexHandle = {
+      val dir = Versions.versionDir(path, version)
+      val p = spark.read.parquet(s"$dir/params").head()
+      VectorIndexHandle(
+        spark.read.parquet(s"$dir/buckets")
+          .withColumn("bucket", col("bucket").cast("long"))
+          .select("id", "v", "bucket", "nrm"),
+        dim = p.getAs[Int]("dim"), bits = p.getAs[Int]("bits"))
+    }
 
     def loadCurrent(path: String)(
         implicit spark: SparkSession): VectorIndexHandle =

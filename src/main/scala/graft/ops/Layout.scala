@@ -333,19 +333,22 @@ object Layout {
       outDir: String, sortCol: String, targetRowsPerFile: Long): Int = {
     require(targetRowsPerFile > 0, s"targetRowsPerFile must be positive")
     // an in-place compact would delete its own input mid-scan (the
-    // overwrite clears outDir before the write job re-reads inDir)
-    require(new org.apache.hadoop.fs.Path(inDir) !=
-        new org.apache.hadoop.fs.Path(outDir),
-      s"compact cannot rewrite in place: inDir and outDir are both $inDir")
+    // overwrite clears outDir before the write job re-reads inDir);
+    // qualified, so `/x`, `file:/x` and a relative `x` compare equal
+    val conf = spark.sparkContext.hadoopConfiguration
+    def qualified(p: String) = graft.io.PathResolver.fsFor(p, conf)
+      .makeQualified(new org.apache.hadoop.fs.Path(p))
+    require(qualified(inDir) != qualified(outDir),
+      s"compact cannot rewrite in place: inDir $inDir and outDir $outDir " +
+        "are the same directory")
     val df = spark.read.parquet(inDir)
     val rows = df.count()
     val nFiles = math.max(1, ((rows + targetRowsPerFile - 1) / targetRowsPerFile).toInt)
     df.repartitionByRange(nFiles, col(sortCol))
       .sortWithinPartitions(sortCol)
       .write.mode("overwrite").parquet(outDir)
-    val fs = graft.io.PathResolver.fsFor(outDir,
-      spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(new org.apache.hadoop.fs.Path(outDir))
+    graft.io.PathResolver.fsFor(outDir, conf)
+      .listStatus(new org.apache.hadoop.fs.Path(outDir))
       .count(_.getPath.getName.endsWith(".parquet"))
   }
 
@@ -839,15 +842,14 @@ object Layout {
         .filter(col("graft_group").isin(touched: _*))
         .groupBy("graft_group")
         .agg(rollAggs.head, rollAggs.tail: _*)
-      // pinned before the overwrite: the union lazily reads the very
-      // dir being replaced (same hazard as the index re-publish path).
-      // Ckpt.forced: a correctness pin, exempt from the eager-conf
-      // opt-out
-      val newGroups = Ckpt.forced(
-        groups0.filter(!col("graft_group").isin(touched: _*))
-          .unionAll(refreshed.select(
-            groups0.columns.map(col).toIndexedSeq: _*)))
-      newGroups.write.mode("overwrite").parquet(s"$manifestDir/groups")
+      // the new rollup is a #groups-row driver panel: collect it and
+      // overwrite `groups` from the local rows, so the write's plan
+      // never reads the directory it replaces
+      val newGroups = groups0.filter(!col("graft_group").isin(touched: _*))
+        .unionAll(refreshed.select(groups0.columns.map(col).toIndexedSeq: _*))
+      spark.createDataFrame(newGroups.collectAsList(), newGroups.schema)
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$manifestDir/groups")
       spark.read.parquet(s"$manifestDir/groups")
     }
   }

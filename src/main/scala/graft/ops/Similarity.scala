@@ -626,86 +626,60 @@ object Similarity {
 
   object IvfIndex {
 
-    /** Persist an IVF index through the generic sink (K1): the
-      * cell-partitioned assignment table plus a (cell, centroid) panel
-      * table. The centroid half is the SIGNATURE of the index — a
-      * reload that recomputed centroids (or read them in a different
-      * order) would probe different cells and silently lose recall, so
-      * they round-trip as data, ordered by cell id. Overwrite mode
-      * makes re-publication idempotent, same contract as
-      * [[graft.ops.Dedup.NearDupIndex.save]].
+    /** Write one version image into the freshly claimed `dir`: the
+      * cell-partitioned assignment table (a loaded probe prunes files by
+      * cell id without re-shuffling the whole table first) plus a
+      * (cell, centroid) panel table. The centroid half is the SIGNATURE
+      * of the index — a reload that recomputed centroids (or read them
+      * in a different order) would probe different cells and silently
+      * lose recall, so they round-trip as data, ordered by cell id.
+      * Default ErrorIfExists mode: the claim made `dir` this writer's
+      * alone, so a collision fails loudly.
       *
       * This is the build-once / probe-many shape a 100 TB vector store
       * needs: the O(corpus) k-means + assignment runs in ONE job; every
       * later search/knnJoin/addVectors/remove session cold-loads the
       * tables (centroids are nlist rows — a driver panel, not data)
       * and pays only its own probe cost. */
-    def save(idx: IvfIndex, path: String): Unit = {
-      implicit val spark: SparkSession = idx.assigned.sparkSession
+    private def writeVersion(idx: IvfIndex, dir: String): Unit = {
+      val spark = idx.assigned.sparkSession
       import spark.implicits._
-      def w(df: DataFrame, sub: String): Unit =
-        graft.io.DataFrameIO.write(df, graft.io.SourceParams(
-          "parquet", Some(s"$path/$sub"), saveMode = Some("overwrite")))
-      // partitionBy(cell) so a loaded probe prunes files by cell id
-      // without re-shuffling the whole table first. The frame is PINNED
-      // first: the maintenance loop saves an index DERIVED from
-      // load(path) back to the same path, and an overwrite that still
-      // lazily reads its own target deletes the files mid-scan — the
-      // barrier severs that read. Applied only when the plan actually
-      // reads under the destination (Ckpt.pinnedIfReadsFrom): fresh
-      // builds and versioned publishes into new dirs skip the
-      // materialization pass. (At very large index scale prefer
-      // versioned publish dirs; the pin costs one cache pass.)
-      graft.io.DataFrameIO.write(Ckpt.pinnedIfReadsFrom(idx.assigned, path),
-        graft.io.SourceParams("parquet", Some(s"$path/assigned"),
-          saveMode = Some("overwrite"), partitionBy = Seq("cell")))
-      w(idx.centroids.zipWithIndex.toSeq
+      idx.assigned.write.partitionBy("cell").parquet(s"$dir/assigned")
+      idx.centroids.zipWithIndex.toSeq
         .map { case (c, j) => (j, c.toSeq) }
-        .toDF("cell", "centroid"), "centroids")
+        .toDF("cell", "centroid").write.parquet(s"$dir/centroids")
     }
 
-    /** Reload a [[save]]d index. The assignment table comes back
-      * cell-partitioned on disk (partition pruning replaces the
-      * in-session `repartition(cell)`); only the nlist-row centroid
-      * panel is collected driver-side. `vnorm` was computed once at
-      * build time and round-trips as a stored double, so every loaded
-      * cosine is bit-identical to the in-session index — load(save(x))
-      * ≡ x (spec-proven, and gate e28 replays e7's oracle through the
-      * disk round trip). */
-    def load(path: String)(implicit spark: SparkSession): IvfIndex = {
-      def r(sub: String): DataFrame = graft.io.DataFrameIO.load(
-        graft.io.SourceParams("parquet", Some(s"$path/$sub")))
-      val cents: Array[Array[Double]] = r("centroids")
+    /** Publish `idx` as the next immutable committed version under
+      * `path` (claim/commit marker discipline — [[Versions.publish]]) —
+      * the index's only persistence verb. Returns the new version
+      * number. */
+    def publish(idx: IvfIndex, path: String): Int = {
+      implicit val spark: SparkSession = idx.assigned.sparkSession
+      Versions.publish(path, writeVersion(idx, _))
+    }
+
+    /** Load a committed version — index time travel. The assignment
+      * table comes back cell-partitioned on disk (partition pruning
+      * replaces the in-session `repartition(cell)`); only the nlist-row
+      * centroid panel is collected driver-side. `vnorm` was computed
+      * once at build time and round-trips as a stored double, so every
+      * loaded cosine is bit-identical to the in-session index (spec-
+      * proven, and gate e28 replays e7's oracle through the disk round
+      * trip). */
+    def loadVersion(path: String, version: Int)(
+        implicit spark: SparkSession): IvfIndex = {
+      val dir = Versions.versionDir(path, version)
+      val cents: Array[Array[Double]] = spark.read.parquet(s"$dir/centroids")
         .orderBy("cell").collect()
         .map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray)
       // column order is part of the index contract (partitionBy moved
       // `cell` last on disk); cast back: partition values read as the
       // directory-inferred type
-      IvfIndex(r("assigned").select(col("id").cast("long"),
-        col("v").cast("array<double>"), col("vnorm").cast("double"),
-        col("cell").cast("int")), cents)
+      IvfIndex(spark.read.parquet(s"$dir/assigned").select(
+        col("id").cast("long"), col("v").cast("array<double>"),
+        col("vnorm").cast("double"), col("cell").cast("int")), cents)
     }
-
-    // ---- VERSIONED publish: the in-place [[save]] is a single mutable
-    // slot — fine for one writer and no readers mid-publish, but a real
-    // vector store wants what its lake side already has: immutable
-    // version dirs, an atomic pointer flip, time travel, and vacuum.
-    // The machinery is the shared [[graft.ops.Versions]] discipline —
-    // one implementation for every index family.
-
-    /** Publish `idx` as the next immutable committed version under
-      * `path` (claim/commit marker discipline — [[Versions.publish]]).
-      * Returns the new version number — the publish shape [[save]]'s
-      * scaladoc recommends at very large index scale. */
-    def publish(idx: IvfIndex, path: String): Int = {
-      implicit val spark: SparkSession = idx.assigned.sparkSession
-      Versions.publish(path, dir => save(idx, dir))
-    }
-
-    /** Load a specific retained version — index time travel. */
-    def loadVersion(path: String, version: Int)(
-        implicit spark: SparkSession): IvfIndex =
-      load(Versions.versionDir(path, version))
 
     /** Load the newest committed version. */
     def loadCurrent(path: String)(implicit spark: SparkSession): IvfIndex =
@@ -743,7 +717,7 @@ object Similarity {
 
     /** Train (sampling-seed) a codebook from the corpus rows with ids
       * 0..k−1 — the exact panel [[productQuantize]] uses internally,
-      * reified so it can be [[save]]d. */
+      * reified so it can be [[publish]]ed. */
     def fit(df: DataFrame, idCol: String, vecCol: String,
         m: Int, k: Int): PqCodebook = {
       val seeds = pqSeeds(df, idCol, vecCol, k)
@@ -752,28 +726,40 @@ object Similarity {
       PqCodebook(seeds, m, k)
     }
 
-    /** Persist: one (cid, centroid) row per seed plus a one-row params
-      * table pinning (m, k) — without the geometry a reload could slice
-      * subspaces differently and mis-decode every stored code. */
-    def save(cb: PqCodebook, path: String)(implicit spark: SparkSession): Unit = {
+    /** Write one version image into the freshly claimed `dir`: one
+      * (cid, centroid) row per seed plus a one-row params table pinning
+      * (m, k) — without the geometry a reload could slice subspaces
+      * differently and mis-decode every stored code. Default
+      * ErrorIfExists mode, as for [[IvfIndex]]. */
+    private def writeVersion(cb: PqCodebook, dir: String)(
+        implicit spark: SparkSession): Unit = {
       import spark.implicits._
-      def w(df: DataFrame, sub: String): Unit =
-        graft.io.DataFrameIO.write(df, graft.io.SourceParams(
-          "parquet", Some(s"$path/$sub"), saveMode = Some("overwrite")))
-      w(cb.seeds.zipWithIndex.toSeq
-        .map { case (c, j) => (j, c.toSeq) }.toDF("cid", "centroid"), "seeds")
-      w(Seq((cb.m, cb.k)).toDF("m", "k"), "params")
+      cb.seeds.zipWithIndex.toSeq
+        .map { case (c, j) => (j, c.toSeq) }
+        .toDF("cid", "centroid").write.parquet(s"$dir/seeds")
+      Seq((cb.m, cb.k)).toDF("m", "k").write.parquet(s"$dir/params")
     }
 
-    def load(path: String)(implicit spark: SparkSession): PqCodebook = {
-      def r(sub: String): DataFrame = graft.io.DataFrameIO.load(
-        graft.io.SourceParams("parquet", Some(s"$path/$sub")))
-      val p = r("params").head()
+    /** Publish the next immutable version under `path` — the codebook's
+      * only persistence verb ([[Versions.publish]]). A retrained
+      * codebook is a new version; codes encoded against an older one
+      * keep decoding through [[loadVersion]]. */
+    def publish(cb: PqCodebook, path: String)(
+        implicit spark: SparkSession): Int =
+      Versions.publish(path, writeVersion(cb, _))
+
+    def loadVersion(path: String, version: Int)(
+        implicit spark: SparkSession): PqCodebook = {
+      val dir = Versions.versionDir(path, version)
+      val p = spark.read.parquet(s"$dir/params").head()
       PqCodebook(
-        r("seeds").orderBy("cid").collect()
+        spark.read.parquet(s"$dir/seeds").orderBy("cid").collect()
           .map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray),
         m = p.getAs[Int]("m"), k = p.getAs[Int]("k"))
     }
+
+    def loadCurrent(path: String)(implicit spark: SparkSession): PqCodebook =
+      loadVersion(path, Versions.current(path))
   }
 
   /** Product quantization with a deterministic seeded codebook: the

@@ -16,16 +16,16 @@ final case class CommitConflictException(path: String, attempted: Int,
     s"holds it (newest committed: v$winner) — re-resolve, re-prepare, retry")
 
 /** Immutable version directories + per-version CLAIM/COMMIT markers —
-  * the shared publish discipline for every persisted index family (IVF
-  * vector index, text LSH admission index, vector-LSH admission index)
-  * and the [[Catalog]], mirroring a lake format's commit log. An
-  * in-place overwrite save is a single mutable slot: safe for one
-  * writer with no readers mid-publish, but a deployment wants readers
-  * pinned to a consistent snapshot while maintenance publishes around
-  * them — and INDEPENDENT writers must never silently lose a commit.
+  * the only publish discipline of every persisted index family (IVF
+  * vector index, PQ codebook, text LSH admission index, vector-LSH
+  * admission index) and of the [[Catalog]], mirroring a lake format's
+  * commit log. No family overwrites in place: readers stay pinned to a
+  * consistent snapshot while maintenance publishes around them, an
+  * image derived from the current version never deletes the files it
+  * reads, and INDEPENDENT writers never silently lose a commit.
   *
   * Layout under `path`: `v<N>/` (one full image each, written by the
-  * family's own save), plus two marker files per version —
+  * family's private version writer), plus two marker files per version —
   * `_claim.v<N>` (created ATOMICALLY by exactly one writer before it
   * starts writing `v<N>/`, the mutual-exclusion atom) and
   * `_commit.v<N>` (created by that writer AFTER `v<N>/` is fully

@@ -55,18 +55,6 @@ class CkptSpec extends AnyFunSuite with SparkTestBase {
       df.collect().sortBy(_.getLong(0)).toSeq)
   }
 
-  test("conf opt-out restores the lazy (perf-A/B-only) behavior") {
-    spark.conf.set(Ckpt.EagerConf, "false")
-    try {
-      val c = Ckpt.pinned(spark.range(0, 10).toDF())
-      assert(pendingCheckpoints(c).nonEmpty,
-        "opt-out should leave the checkpoint pending until the first action")
-      // materialize on the driver thread (single-threaded here: safe)
-      assert(c.count() === 10L)
-      assert(pendingCheckpoints(c).isEmpty)
-    } finally spark.conf.set(Ckpt.EagerConf, "true")
-  }
-
   test("parallel broadcast-join actions over fresh barriers stay live " +
       "(deadlock regression, watchdogged)") {
     // The racy shape from the round-15 jstack: the freshly barriered
@@ -130,43 +118,6 @@ class CkptSpec extends AnyFunSuite with SparkTestBase {
       }
     }
     Await.result(Future.sequence(work), 4.minutes)
-  }
-
-  test("eager-conf opt-out cannot corrupt read-your-own-overwrite " +
-      "publishes (Ckpt.forced bypasses the conf)") {
-    // The round-16-advice hazard: an index derived from load(path) is
-    // re-published to the SAME path with mode=overwrite. If the pin
-    // before the write honored the lazy opt-out, the overwrite would
-    // delete the target directory while the checkpoint is still
-    // pending, and the write job would then scan the deleted files —
-    // destroying the persisted index. The publish sites use
-    // Ckpt.forced, so the cycle must survive with the conf set.
-    import spark.implicits._
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-ckpt-forced").toString
-    val corpus = (0 until 30).map(i =>
-      (i.toLong, s"alpha beta gamma delta epsilon zeta ${i % 5} " +
-        s"eta theta iota kappa ${i}")).toDF("doc_id", "text")
-    val batch = (100 until 110).map(i =>
-      (i.toLong, s"completely fresh document body $i with unique words " +
-        s"like pterodactyl$i and quux$i")).toDF("doc_id", "text")
-    spark.conf.set(Ckpt.EagerConf, "false")
-    try {
-      Dedup.NearDupIndex.save(
-        Dedup.nearDupIndex(corpus, "doc_id", "text"), path)
-      val day1 = Dedup.NearDupIndex.load(path)
-      // counts BEFORE the re-publish: day1's frames reference the
-      // on-disk files the second save replaces
-      val (nFp1, nHash1) = (day1.fingerprints.count(), day1.hashes.count())
-      // derived-from-load(path) → re-published to the same path: the
-      // pre-fix failure mode was files deleted mid-scan here
-      Dedup.NearDupIndex.save(
-        Dedup.NearDupIndex.extend(day1, batch, "doc_id", "text"), path)
-      val day2 = Dedup.NearDupIndex.load(path)
-      assert(day2.fingerprints.count() === nFp1 + 10,
-        "extended index lost rows through the same-path re-publish")
-      assert(day2.hashes.count() === nHash1 + 10)
-    } finally spark.conf.set(Ckpt.EagerConf, "true")
   }
 
   test("looped operators hand out no pending checkpoints (structural)") {

@@ -161,6 +161,29 @@ class DataSkippingSpec extends AnyFunSuite with SparkTestBase {
     assert(pruned.toSeq === full.toSeq)
   }
 
+  test("compact refuses an in-place rewrite however the directory is spelled") {
+    // `/x`, `file:/x` and a relative `x` name one directory: the guard
+    // compares qualified paths, so no spelling lets the overwrite clear
+    // the input it is about to read
+    val rel = s"target/graft-compact-${java.util.UUID.randomUUID()}/t"
+    val abs = new java.io.File(rel).getAbsolutePath
+    spark.range(1000).select(col("id").as("k")).repartition(4).write.parquet(abs)
+    try {
+      for (out <- Seq(s"file:$abs", rel)) {
+        val e = intercept[IllegalArgumentException](
+          Layout.compact(spark, abs, out, "k", 250L))
+        assert(e.getMessage.contains("in place"), s"outDir $out")
+      }
+      assert(spark.read.parquet(abs).count() === 1000L)
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm))
+        f.delete()
+      }
+      rm(new java.io.File(abs).getParentFile)
+    }
+  }
+
   test("a range beyond the data returns empty with the data schema") {
     val dir = sortedLayout(100, 50)
     val manifest = Layout.statsManifest(spark, dir, Seq("k"))

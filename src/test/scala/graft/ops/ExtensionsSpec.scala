@@ -467,8 +467,8 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     // the persisted index admits the identical set after a disk round
     // trip — params (k, bands, shingleSize) travel with the tables
     val dir = java.nio.file.Files.createTempDirectory("ndidx").toString
-    Dedup.NearDupIndex.save(idx, dir)
-    val loaded = Dedup.NearDupIndex.load(dir)
+    Dedup.NearDupIndex.publish(idx, dir)
+    val loaded = Dedup.NearDupIndex.loadCurrent(dir)
     assert(loaded.k === idx.k && loaded.nBands === idx.nBands &&
       loaded.shingleSize === idx.shingleSize)
     val keptLoaded = Dedup.nearDupFilter(loaded, batch, "doc_id", "text", tau = 0.5)
@@ -546,8 +546,8 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       dim = dim, bits = 6)
     val path = java.nio.file.Files
       .createTempDirectory("graft-vlsh").toString
-    Dedup.VectorNearDupIndex.save(idx, dim = dim, bits = 6, path)
-    val loaded = Dedup.VectorNearDupIndex.load(path)
+    Dedup.VectorNearDupIndex.publish(idx, dim = dim, bits = 6, path)
+    val loaded = Dedup.VectorNearDupIndex.loadCurrent(path)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("id", "v", "bucket", "nrm").collect().map(_.toSeq).toSet
     assert(loaded.dim === dim && loaded.bits === 6)

@@ -4,9 +4,11 @@ import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** IvfIndex / PqCodebook disk round trips — the build-once / probe-many
-  * contract (gate e28/e29 prove oracle parity; these pin structural
-  * equality load(save(x)) ≡ x and the on-disk layout). */
+/** Index-family disk round trips through [[Versions]] — the build-once /
+  * probe-many contract (gates e28/e29 prove oracle parity; these pin
+  * structural equality loadCurrent(publish(x)) ≡ x, the on-disk layout,
+  * and that a re-publication derived from the current version never
+  * loses the image it read). */
 class IndexPersistenceSpec extends AnyFunSuite with SparkTestBase {
 
   import spark.implicits._
@@ -21,8 +23,8 @@ class IndexPersistenceSpec extends AnyFunSuite with SparkTestBase {
   test("IvfIndex load(save(idx)) preserves centroids and assignment rows") {
     val idx = Similarity.ivfIndexSeeded(vecs, "vec_id", "embedding", nlist = 4)
     val path = s"${tmp("ivf")}/idx"
-    Similarity.IvfIndex.save(idx, path)
-    val loaded = Similarity.IvfIndex.load(path)
+    Similarity.IvfIndex.publish(idx, path)
+    val loaded = Similarity.IvfIndex.loadCurrent(path)
 
     assert(loaded.centroids.length === idx.centroids.length)
     loaded.centroids.zip(idx.centroids).foreach { case (a, b) =>
@@ -39,10 +41,10 @@ class IndexPersistenceSpec extends AnyFunSuite with SparkTestBase {
   test("loaded IvfIndex replays knnJoin bit-exactly") {
     val idx = Similarity.ivfIndexSeeded(vecs, "vec_id", "embedding", nlist = 4)
     val path = s"${tmp("ivf-knn")}/idx"
-    Similarity.IvfIndex.save(idx, path)
+    Similarity.IvfIndex.publish(idx, path)
     val expected = idx.knnJoin(k = 3, nprobe = 2)
       .orderBy("id", "rank").collect().map(_.toSeq)
-    val got = Similarity.IvfIndex.load(path).knnJoin(k = 3, nprobe = 2)
+    val got = Similarity.IvfIndex.loadCurrent(path).knnJoin(k = 3, nprobe = 2)
       .orderBy("id", "rank").collect().map(_.toSeq)
     assert(expected.nonEmpty)
     assert(got.toSeq === expected.toSeq)
@@ -115,8 +117,9 @@ class IndexPersistenceSpec extends AnyFunSuite with SparkTestBase {
   test("assignment table is cell-partitioned on disk (probe prunes files)") {
     val idx = Similarity.ivfIndexSeeded(vecs, "vec_id", "embedding", nlist = 4)
     val path = s"${tmp("ivf-layout")}/idx"
-    Similarity.IvfIndex.save(idx, path)
-    val dirs = new java.io.File(s"$path/assigned").listFiles()
+    val v = Similarity.IvfIndex.publish(idx, path)
+    val dirs = new java.io.File(s"${Versions.versionDir(path, v)}/assigned")
+      .listFiles()
       .filter(_.isDirectory).map(_.getName).toSet
     assert(dirs.exists(_.startsWith("cell=")),
       s"expected cell=N partition dirs, got $dirs")
@@ -125,8 +128,8 @@ class IndexPersistenceSpec extends AnyFunSuite with SparkTestBase {
   test("PqCodebook load(save(cb)) ≡ cb, and the loaded encode matches") {
     val cb = Similarity.PqCodebook.fit(vecs, "vec_id", "embedding", m = 4, k = 4)
     val path = s"${tmp("pq")}/cb"
-    Similarity.PqCodebook.save(cb, path)
-    val loaded = Similarity.PqCodebook.load(path)
+    Similarity.PqCodebook.publish(cb, path)
+    val loaded = Similarity.PqCodebook.loadCurrent(path)
 
     assert(loaded.m === cb.m && loaded.k === cb.k)
     loaded.seeds.zip(cb.seeds).foreach { case (a, b) =>
@@ -141,51 +144,57 @@ class IndexPersistenceSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("re-publication: a second save REPLACES what load reads") {
-    // the round-15 advice bug: overwrite-mode writes were routed through
-    // the K2 collision-free path, so save #2 landed in a _<millis>
-    // suffix directory and load silently kept returning index #1
+    // the second publish is what loadCurrent reads — never a suffixed
+    // sibling that leaves readers on the stale first index — while the
+    // first image stays intact as v1
     val path = s"${tmp("ivf-republish")}/idx"
     val idx1 = Similarity.ivfIndexSeeded(vecs, "vec_id", "embedding", nlist = 4)
-    Similarity.IvfIndex.save(idx1, path)
+    Similarity.IvfIndex.publish(idx1, path)
     val grown = vecs.unionAll(Seq((500L,
       Array.tabulate(8)(j => math.tan(j + 1).toFloat))).toDF("vec_id", "embedding"))
     val idx2 = Similarity.ivfIndexSeeded(grown, "vec_id", "embedding", nlist = 4)
-    Similarity.IvfIndex.save(idx2, path)
-    val loaded = Similarity.IvfIndex.load(path)
+    Similarity.IvfIndex.publish(idx2, path)
+    val loaded = Similarity.IvfIndex.loadCurrent(path)
     assert(loaded.assigned.count() === idx2.assigned.count())
     assert(loaded.assigned.filter(col("id") === 500L).count() === 1L,
-      "load must see the re-published index, not the stale first save")
+      "loadCurrent must see the re-published index, not the stale first one")
+    assert(Similarity.IvfIndex.loadVersion(path, 1).assigned.count() ===
+      idx1.assigned.count())
     // no suffixed sibling directories left behind by the re-publish
     val parent = new java.io.File(path).getParentFile.listFiles().map(_.getName)
     assert(parent.toSeq === Seq("idx"), s"unexpected siblings: ${parent.toSeq}")
+    assert(Versions.listVersions(path) === Seq(1, 2))
   }
 
   test("re-publication: PqCodebook second save wins") {
     val path = s"${tmp("pq-republish")}/cb"
     val cb1 = Similarity.PqCodebook.fit(vecs, "vec_id", "embedding", m = 4, k = 4)
-    Similarity.PqCodebook.save(cb1, path)
+    Similarity.PqCodebook.publish(cb1, path)
     val cb2 = Similarity.PqCodebook.fit(vecs, "vec_id", "embedding", m = 2, k = 8)
-    Similarity.PqCodebook.save(cb2, path)
-    val loaded = Similarity.PqCodebook.load(path)
+    Similarity.PqCodebook.publish(cb2, path)
+    val loaded = Similarity.PqCodebook.loadCurrent(path)
     assert(loaded.m === 2 && loaded.k === 8,
-      "load must see the re-published codebook geometry")
+      "loadCurrent must see the re-published codebook geometry")
+    val first = Similarity.PqCodebook.loadVersion(path, 1)
+    assert(first.m === 4 && first.k === 4,
+      "codes encoded against v1 must keep decoding against v1")
   }
 
   test("maintenance cycle: save → load → add → remove → save → load ≡ " +
       "batch rebuild over the surviving set") {
     val path = s"${tmp("ivf-cycle")}/idx"
-    Similarity.IvfIndex.save(
+    Similarity.IvfIndex.publish(
       Similarity.ivfIndexSeeded(vecs, "vec_id", "embedding", nlist = 4), path)
     val batch = Seq.tabulate(6)(i => (100L + i,
       Array.tabulate(8)(j => math.cos(i * 8 + j).toFloat)))
       .toDF("vec_id", "embedding")
-    val day2 = Similarity.IvfIndex.load(path)
+    val day2 = Similarity.IvfIndex.loadCurrent(path)
       .addVectors(batch, "vec_id", "embedding")
     val pruned = day2.remove(
       day2.assigned.select(col("id").as("vec_id"))
         .filter(col("vec_id") % 5 === 0), "vec_id")
-    Similarity.IvfIndex.save(pruned, path) // re-publish in place
-    val loaded = Similarity.IvfIndex.load(path)
+    Similarity.IvfIndex.publish(pruned, path) // v2, same root
+    val loaded = Similarity.IvfIndex.loadCurrent(path)
     // oracle: one rebuild-shaped index over exactly the surviving set,
     // with the ORIGINAL build's centroids (maintenance never refits)
     val survivors = vecs.unionAll(batch).filter(col("vec_id") % 5 =!= 0)
@@ -207,13 +216,73 @@ class IndexPersistenceSpec extends AnyFunSuite with SparkTestBase {
     // to a later batch without re-derivation (no ids 0..k−1 needed)
     val cb = Similarity.PqCodebook.fit(vecs, "vec_id", "embedding", m = 4, k = 4)
     val path = s"${tmp("pq-batch")}/cb"
-    Similarity.PqCodebook.save(cb, path)
+    Similarity.PqCodebook.publish(cb, path)
     val batch = Seq((1000L, Array.tabulate(8)(j => math.cos(j).toFloat)))
       .toDF("vec_id", "embedding")
-    val out = Similarity.PqCodebook.load(path)
+    val out = Similarity.PqCodebook.loadCurrent(path)
       .encode(batch, "vec_id", "embedding")
       .collect()
     assert(out.length === 4) // one code per subspace
     assert(out.forall(_.getLong(0) == 1000L))
+  }
+
+  test("NearDupIndex re-published to the same RELATIVE root from its own " +
+      "loadCurrent loses no rows and leaves v1 untouched") {
+    // the read-your-own-overwrite shape: the second image is derived
+    // from loadCurrent(root) and published back under root, which is
+    // spelled relative to the working directory. Each version is a new
+    // directory, so the publish never deletes the files its plan reads.
+    val root = s"target/graft-relroot-${java.util.UUID.randomUUID()}/idx"
+    assert(!new java.io.File(root).isAbsolute)
+    val corpus = (0 until 30).map(i =>
+      (i.toLong, s"alpha beta gamma delta epsilon zeta ${i % 5} " +
+        s"eta theta iota kappa ${i}")).toDF("doc_id", "text")
+    val batch = (100 until 110).map(i =>
+      (i.toLong, s"completely fresh document body $i with unique words " +
+        s"like pterodactyl$i and quux$i")).toDF("doc_id", "text")
+    def image(idx: Dedup.NearDupIndex) = (
+      idx.fingerprints.collect().toSet,
+      idx.bands.collect().toSet,
+      idx.hashes.collect().map(r => (r.getLong(0),
+        r.getAs[scala.collection.Seq[Long]](1).toSeq)).toSet)
+    try {
+      assert(Dedup.NearDupIndex.publish(
+        Dedup.nearDupIndex(corpus, "doc_id", "text"), root) === 1)
+      val day1 = Dedup.NearDupIndex.loadCurrent(root)
+      val (fp1, bands1, hashes1) = image(day1)
+      assert(Dedup.NearDupIndex.publish(
+        Dedup.NearDupIndex.extend(day1, batch, "doc_id", "text"), root) === 2)
+      val (fp2, bands2, hashes2) = image(Dedup.NearDupIndex.loadCurrent(root))
+      // no rows lost: v2 holds every v1 row plus the batch
+      assert(fp1.subsetOf(fp2) && fp2.size === fp1.size + 10)
+      assert(bands1.subsetOf(bands2) && bands2.size > bands1.size)
+      assert(hashes1.subsetOf(hashes2) && hashes2.size === hashes1.size + 10)
+      // time travel: v1 is the untouched first image
+      assert(image(Dedup.NearDupIndex.loadVersion(root, 1)) ===
+        ((fp1, bands1, hashes1)))
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm))
+        f.delete()
+      }
+      rm(new java.io.File(root).getParentFile)
+    }
+  }
+
+  test("version writer fails loudly instead of writing over an existing " +
+      "version directory") {
+    // a stray v1 image with no markers: publish claims v1 (no marker
+    // names it) and its ErrorIfExists writer must refuse the directory
+    val path = s"${tmp("ndx-collision")}/idx"
+    val stray = s"${Versions.versionDir(path, 1)}/fingerprints"
+    Seq(42L).toDF("fingerprint").write.parquet(stray)
+    val docs = Seq((0L, "alpha beta gamma delta epsilon zeta eta theta"))
+      .toDF("doc_id", "text")
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Dedup.NearDupIndex.publish(
+        Dedup.nearDupIndex(docs, "doc_id", "text"), path)
+    }
+    assert(spark.read.parquet(stray).as[Long].collect().toSeq === Seq(42L))
+    assert(Versions.listVersions(path).isEmpty, "nothing may commit")
   }
 }
